@@ -59,6 +59,15 @@ def cypher(
     """``graph`` is a :class:`PropertyGraph`, or — for composite
     (multi-graph) queries with ``USE`` — a :class:`GraphCatalog` or a
     plain ``{name: PropertyGraph}`` dict (first entry is the default)."""
+    return _run(spark, query, graph, params, {})
+
+
+def _run(spark: SparkSession, query: str, graph,
+         params: Optional[Dict[str, Any]],
+         ast_cache: Dict[str, Any]) -> DataFrame:
+    """The one statement path behind :func:`cypher` and
+    :meth:`CypherSession.run`.  ``ast_cache`` (preparsed body -> AST)
+    lets a session parse each distinct text once."""
     from .graph import GraphCatalog
     from .cypher.translate import Translator
 
@@ -74,7 +83,9 @@ def cypher(
     if is_schema_command(body):
         # SchemaLogicalPlan / ShowCommandLogicalPlan path (SURVEY §2.10)
         return run_schema_command(spark, graph, body)
-    ast = parse(body)
+    ast = ast_cache.get(body)
+    if ast is None:
+        ast = ast_cache[body] = parse(body)
     if graph is not None:
         graph.begin_scan_tracking()  # statement-scoped shared-base fusion
     if mode == "EXPLAIN":
@@ -179,11 +190,5 @@ class CypherSession:
         self._ast_cache: Dict[str, Any] = {}
 
     def run(self, query: str, params: Optional[Dict[str, Any]] = None) -> DataFrame:
-        from .cypher.translate import Translator
-
-        ast = self._ast_cache.get(query)
-        if ast is None:
-            ast = parse(query)
-            self._ast_cache[query] = ast
-        self.graph.begin_scan_tracking()
-        return Translator(self.spark, self.graph, params or {}).translate(ast)
+        """Same semantics as :func:`cypher`, parsing each text once."""
+        return _run(self.spark, query, self.graph, params, self._ast_cache)

@@ -55,37 +55,6 @@ def exact_dup_groups(df: DataFrame, key: Column, id_col: str) -> DataFrame:
               .filter(F.col("n") > 1))
 
 
-def widen_under_split(df: DataFrame, key: str) -> DataFrame:
-    """Redistribute an under-split input ahead of a compute-heavy map side
-    (guide §2.5, unsplittable inputs).
-
-    A single-row-group parquet file (or one gzip blob) yields ONE scan
-    task, so everything fused into the scan stage — tokenization, the
-    shingle explode, the 32-permutation partial min-hash — runs on one
-    core regardless of cluster size.  Fires only when the scan yields
-    fewer splits than the cluster's default parallelism: a real corpus at
-    scale has thousands of row-group splits, so this never fires there,
-    and when it does fire the cost is one extra pass of a sub-split input
-    — exactly the §2.5 remedy, cheaper than leaving (cores-1)/cores of
-    the cluster idle.  Hash-partitioned on ``key`` (deterministic under
-    task retries, unlike round-robin over nondeterministic input).
-    Measured (sf0.1, interleaved min-of-8): minhash_dedup_pairs 1.272 s ->
-    1.065 s (1.19x), results identical; 2x-cores fanout measured 0.96x
-    (scheduling overhead), hence exactly ``defaultParallelism``.
-    ``NEO4J_SPARK_WIDEN_SPLITS=0`` disables (A/B hook)."""
-    import os
-    if os.environ.get("NEO4J_SPARK_WIDEN_SPLITS", "1") == "0":
-        return df
-    try:
-        n = df.rdd.getNumPartitions()
-        cores = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        return df
-    if n >= cores:
-        return df
-    return df.repartition(cores, F.col(key))
-
-
 # ---- shingles / minhash ---------------------------------------------------
 
 
@@ -181,7 +150,7 @@ def minhash_lsh_candidates(
     (self-joins cannot share one lineage without materialization).
     """
     ex = _ex if _ex is not None else exploded_shingles(
-        widen_under_split(df, id_col), id_col, text_col, shingle_k)
+        df, id_col, text_col, shingle_k)
     banded = _banded_signatures(ex, num_hashes, bands).persist()
     a = banded.alias("a")
     b = banded.alias("b")
@@ -218,12 +187,7 @@ def minhash_dedup_pairs(
     into executor storage memory entirely — two streaming scans beat one
     scan plus a corpus-sized cache write/read.  Verify cost stays
     proportional to the candidate set, not the corpus (semi-join prune
-    before collect).  r9: an under-split input (single-row-group test
-    file -> one scan task) is redistributed once up front
-    (widen_under_split, guide §2.5) so the explode + 32-permutation
-    partial min-hash use the whole cluster; both the candidate and the
-    verify branch read the widened frame."""
-    df = widen_under_split(df, id_col)
+    before collect)."""
     ex = exploded_shingles(df, id_col, text_col, shingle_k)
     # persist the candidate pairs: they feed three consumers (the two
     # cand_ids projections and the verify join) and each unpersisted
@@ -283,16 +247,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     the block key is a single rare gram — high-cardinality, bounded
     occupancy, well-distributed shuffle at 100 TB.  A size filter
     (t*|x| <= |y| <= |x|/t) prunes candidates further before the exact
-    verify, whose cost is proportional to the candidate set.
-
-    r9: an under-split input is redistributed first (widen_under_split,
-    guide §2.5) — the per-document gram arrays (string k-shingles) are
-    the dominant map-side cost and would otherwise all be computed in
-    the single scan task.  Measured at sf0.1 (interleaved min-of-6):
-    8.851 s -> 2.481 s (3.57x), results identical."""
+    verify, whose cost is proportional to the candidate set."""
     from pyspark.sql import Window as W
 
-    df = widen_under_split(df, id_col)
     grams = df.select(
         F.col(group_col).alias("_g"), F.col(id_col).alias("_id"),
         F.array_distinct(shingles(F.col(text_col), n)).alias("_grams"))

@@ -174,17 +174,7 @@ def embedding_cosine_pairs(df: DataFrame, threshold: float = 0.9,
 
     Cosine runs through the Arrow-batched numpy kernel (the same one the
     exact k-NN join is graded with): the quadratic pair stream is exactly
-    where the interpreted-HOF per-row cost (~10-100x) compounds worst.
-
-    r9: an under-split input (single-row-group file -> one scan task)
-    is redistributed first (guide §2.5): the pair join streams one side,
-    so a 1-split scan serializes the whole quadratic kernel on one core.
-    Per-pair scoring has no cross-pair accumulation, so partitioning
-    cannot change any value.  Measured at sf0.1 (interleaved min-of-8):
-    5.162 s -> 1.155 s (4.47x), results identical."""
-    from .dedup import widen_under_split
-
-    df = widen_under_split(df, id_col)
+    where the interpreted-HOF per-row cost (~10-100x) compounds worst."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
                   *([F.col(block_col).alias("_ba")] if block_col else []))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),

@@ -44,9 +44,6 @@ def _pin(df: DataFrame) -> DataFrame:
     Persisting makes each level compute once; blocks are LRU-evicted /
     cleared by the session, matching the reference's per-level frontier
     materialization (ShortestPath.java keeps frontier sets in memory)."""
-    import os
-    if os.environ.get("NEO4J_SPARK_PIN_LEVELS", "1") == "0":
-        return df
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 REL_CORE_T = "array<struct<_id:bigint,_src:bigint,_dst:bigint,_type:string>>"
@@ -89,8 +86,7 @@ def var_expand(tr, df: DataFrame, prev_var: str, rp: A.RelPat, np: A.NodePat,
     predicate is enforced on the rowstream independently, so using it to
     prune edge types can only drop rows the label filter would drop
     anyway) — feeds schema-reachability pruning (schema_prune.py)."""
-    from .schema_prune import (flipped, level_all_sets, maybe_shared_all,
-                               restricted_scans)
+    from .schema_prune import flipped, level_all_sets, restricted_scans
 
     min_len = rp.min_len if rp.min_len is not None else 1
     max_len = rp.max_len if rp.max_len is not None else tr.max_var_length
@@ -117,20 +113,17 @@ def var_expand(tr, df: DataFrame, prev_var: str, rp: A.RelPat, np: A.NodePat,
     if not dynamic_stop and _prefer_backward(df, prev_var, tscan):
         # backward traversal: roots are the target labels, the distance
         # budget runs toward the start labels
-        bsets, blefts, brights = maybe_shared_all(level_all_sets(
-            tr.graph, flipped(rp), tgt_labels, start_labels, max_len))
-        bscans = restricted_scans(tr, rp, bsets, "__r", slim, max_len,
-                                  reverse=True, lefts=blefts,
-                                  rights=brights)
+        bscans = restricted_scans(tr, rp, level_all_sets(
+            tr.graph, flipped(rp), tgt_labels, start_labels, max_len),
+            "__r", slim, max_len, reverse=True)
         if bscans is not None:
             bscans = [_filtered(s) for s in bscans]
         return _var_expand_backward(tr, df, prev_var, scan, tscan, rvar, nvar,
                                     min_len, max_len, rel_type, bscans)
 
-    fsets, flefts, frights = maybe_shared_all(
-        level_all_sets(tr.graph, rp, start_labels, tgt_labels, max_len))
-    fscans = restricted_scans(tr, rp, fsets, "__r", slim, max_len,
-                              lefts=flefts, rights=frights)
+    fscans = restricted_scans(tr, rp, level_all_sets(
+        tr.graph, rp, start_labels, tgt_labels, max_len),
+        "__r", slim, max_len)
     if fscans is not None:
         fscans = [_filtered(s) for s in fscans]
     base = df.withColumn("__end", F.col(prev_var).getField("_id")) \
@@ -430,23 +423,18 @@ def shortest_path(tr, df: Optional[DataFrame], part: A.PatternPart,
     # distance budget running toward the OTHER endpoint's labels (the meet
     # can happen anywhere, so the budget at level k is max_len - k for
     # both sides)
-    from .schema_prune import (flipped, level_all_sets, maybe_shared_all,
-                               restricted_scans)
+    from .schema_prune import flipped, level_all_sets, restricted_scans
 
     a_labels = (list(a_pat.labels) if a_pat.labels
                 else tr.labels_of(avar))
     b_labels = (list(b_pat.labels) if b_pat.labels
                 else tr.labels_of(bvar))
     slim_scan = track_path != "full"
-    f_sets, f_lefts, f_rights = maybe_shared_all(
-        level_all_sets(tr.graph, rp, a_labels, b_labels, max_len))
-    b_sets, b_lefts, b_rights = maybe_shared_all(level_all_sets(
-        tr.graph, flipped(rp), b_labels, a_labels, max_len))
-    f_scans = restricted_scans(tr, rp, f_sets, "__r", slim_scan, fb,
-                               lefts=f_lefts, rights=f_rights)
-    b_scans = restricted_scans(tr, rp, b_sets, "__r", slim_scan, bb,
-                               reverse=True, lefts=b_lefts,
-                               rights=b_rights)
+    f_scans = restricted_scans(tr, rp, level_all_sets(
+        tr.graph, rp, a_labels, b_labels, max_len), "__r", slim_scan, fb)
+    b_scans = restricted_scans(tr, rp, level_all_sets(
+        tr.graph, flipped(rp), b_labels, a_labels, max_len),
+        "__r", slim_scan, bb, reverse=True)
 
     f_levels = _bfs_levels(starts, scan, fb, track_path, scans=f_scans)
     b_levels = _bfs_levels(tgts, _reverse_scan(scan), bb, track_path,

@@ -33,7 +33,6 @@ the shard keys (``PropertyGraph._extra_labels``) disable pruning entirely.
 
 from __future__ import annotations
 
-import os
 from typing import FrozenSet, List, Optional, Sequence
 
 from ..cypher import ast as A
@@ -93,8 +92,6 @@ def level_all_sets(
       still reach a target label within ``max_len - k`` further steps
       (label-graph BFS distance, driver-side, O(labels x types)).
     """
-    if os.environ.get("NEO4J_SPARK_SCHEMA_PRUNE", "1") == "0":
-        return None
     meta = getattr(graph, "rel_endpoint_labels", {})
     if not meta or getattr(graph, "_extra_labels", None):
         return None
@@ -168,38 +165,6 @@ def level_all_sets(
     return (out, lefts, rights) if pruned else None
 
 
-def maybe_shared(sets):
-    """A/B switch: NEO4J_SPARK_PRUNE_SHARED=1 -> union-shared scans."""
-    if os.environ.get("NEO4J_SPARK_PRUNE_SHARED", "0") == "1":
-        return shared_sets(sets)
-    return sets
-
-
-def maybe_shared_all(all_sets):
-    """(sets, lefts, rights) variant of :func:`maybe_shared`.  Under the
-    shared-scan A/B flag the per-level label constraints are dropped —
-    sharing wants ONE scan reused by every level, which per-level shard
-    pruning would defeat."""
-    if all_sets is None:
-        return None, None, None
-    sets, lefts, rights = all_sets
-    if os.environ.get("NEO4J_SPARK_PRUNE_SHARED", "0") == "1":
-        return shared_sets(sets), None, None
-    return sets, lefts, rights
-
-
-def shared_sets(sets: Optional[List[FrozenSet[str]]]
-                ) -> Optional[List[FrozenSet[str]]]:
-    """Collapse per-level sets to one shared union (empty levels stay
-    empty).  Every non-dead level then joins the SAME scan DataFrame, so
-    Spark reuses a single shuffle exchange across all levels — trading
-    per-level minimality for scan/exchange reuse."""
-    if sets is None:
-        return None
-    u: FrozenSet[str] = frozenset().union(*sets)
-    return [u if s else frozenset() for s in sets]
-
-
 def flipped(rp: "A.RelPat") -> "A.RelPat":
     """The same rel pattern traversed in the opposite direction (for
     backward BFS sides)."""
@@ -209,12 +174,11 @@ def flipped(rp: "A.RelPat") -> "A.RelPat":
     return dataclasses.replace(rp, direction=d)
 
 
-def restricted_scans(tr, rp: "A.RelPat", sets: Optional[List[FrozenSet[str]]],
-                     var: str, slim: bool, depth: int,
-                     reverse: bool = False,
-                     lefts: Optional[List] = None,
-                     rights: Optional[List] = None) -> Optional[List]:
-    """Materialize per-level rel scans for ``sets`` (None -> no pruning).
+def restricted_scans(tr, rp: "A.RelPat", all_sets, var: str, slim: bool,
+                     depth: int, reverse: bool = False) -> Optional[List]:
+    """Materialize per-level rel scans for ``all_sets`` — the
+    ``(sets, lefts, rights)`` triple of :func:`level_all_sets` (None -> no
+    pruning).
 
     A level whose allowed set is empty gets a ``limit(0)`` scan — the
     frontier is schema-dead from there on and Catalyst folds the empty
@@ -224,12 +188,13 @@ def restricted_scans(tr, rp: "A.RelPat", sets: Optional[List[FrozenSet[str]]],
     levels.
 
     ``lefts`` / ``rights``: per-level traversal-source / -destination
-    label alternatives (level_all_sets) for shard pruning.  With
-    ``reverse=True`` the scan is built in ``rp``'s original orientation
-    and column-swapped afterwards, so the traversal-left node is the
-    original pattern-RIGHT side — the label sets swap accordingly."""
-    if sets is None:
+    label alternatives for shard pruning.  With ``reverse=True`` the scan
+    is built in ``rp``'s original orientation and column-swapped
+    afterwards, so the traversal-left node is the original pattern-RIGHT
+    side — the label sets swap accordingly."""
+    if all_sets is None:
         return None
+    sets, lefts, rights = all_sets
     import dataclasses
 
     from pyspark.sql import functions as F
@@ -241,8 +206,8 @@ def restricted_scans(tr, rp: "A.RelPat", sets: Optional[List[FrozenSet[str]]],
     cache: dict = {}
     for k in range(depth):
         key = sets[k] if k < len(sets) else frozenset()
-        lv = lefts[k] if lefts is not None and k < len(lefts) else None
-        rv = rights[k] if rights is not None and k < len(rights) else None
+        lv = lefts[k] if k < len(lefts) else None
+        rv = rights[k] if k < len(rights) else None
         ckey = (key, tuple(lv) if lv else None, tuple(rv) if rv else None)
         if ckey not in cache:
             sub = dataclasses.replace(

@@ -2,7 +2,9 @@
 ExecutionEngine.scala:75), structured parameters (Input operator LP:2389),
 and LOAD CSV linenumber()/file() (LoadCSVPipe.scala:43)."""
 
-from neo4j_spark.api import cypher, preparse
+import pytest
+
+from neo4j_spark.api import CypherSession, cypher, preparse
 
 
 CSV = "file:///root/repo/tests/fixtures/people.csv"
@@ -59,6 +61,24 @@ class TestPreparse:
         # a scan operator appears and reports its runtime row count
         scans = [r for r in rows_ if "Scan" in r["operator"]]
         assert scans and any((r["rows"] or 0) > 0 for r in scans)
+
+
+@pytest.mark.parametrize("q", [
+    "RETURN 1 AS x;",
+    "EXPLAIN MATCH (r:Region) RETURN count(*) AS n",
+    "CYPHER runtime=slotted MATCH (r:Region) RETURN count(*) AS n",
+    "SHOW INDEXES",
+])
+def test_session_run_matches_cypher(spark, tpch_graph, q):
+    # CypherSession.run is cypher() plus a per-text AST cache: the
+    # pre-parser, schema commands and EXPLAIN go through the same path
+    def rows(df):
+        return sorted(map(str, df.collect()))
+
+    session = CypherSession(spark, tpch_graph)
+    expected = rows(cypher(spark, q, tpch_graph))
+    assert rows(session.run(q)) == expected
+    assert rows(session.run(q)) == expected  # served from the AST cache
 
 
 class TestStructuredParams:

@@ -5,7 +5,6 @@ guards a rewrite that would silently regress (results would stay correct
 but the pruned scans/shuffles would re-grow)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from neo4j_spark.api import cypher
 
@@ -595,85 +594,3 @@ class TestEmbeddingCosinePairsVectorized:
         assert "BatchEvalPython" not in plan, plan
         got = [(r.id_a, r.id_b) for r in out.collect()]
         assert got == [(1, 2)]
-
-
-class TestWidenUnderSplit:
-    """An under-split input (single-row-group file -> one scan task) is
-    redistributed across the cluster before the minhash map side (guide
-    §2.5 unsplittable-input remedy).  Scale-safe: the gate compares scan
-    splits to defaultParallelism, so a real corpus (thousands of row
-    groups) never pays the redistribution."""
-
-    def _docs(self, spark, n=1):
-        rows = [(i, f"tok{i // 2 % 7} tok{i // 2 % 5} alpha beta gamma "
-                    f"delta epsilon zeta") for i in range(60)]
-        return spark.createDataFrame(rows, ["doc_id", "text"]) \
-                    .coalesce(n) if n else None
-
-    def test_fires_on_single_partition_input(self, spark):
-        from neo4j_spark.ml.dedup import widen_under_split
-        docs = self._docs(spark, 1)
-        w = widen_under_split(docs, "doc_id")
-        cores = spark.sparkContext.defaultParallelism
-        assert w.rdd.getNumPartitions() == cores
-        plan = plan_of(w)
-        assert "REPARTITION_BY_NUM" in plan, plan
-
-    def test_noop_on_well_split_input(self, spark):
-        from neo4j_spark.ml.dedup import widen_under_split
-        cores = spark.sparkContext.defaultParallelism
-        docs = self._docs(spark, 1).repartition(cores, F.col("doc_id"))
-        assert widen_under_split(docs, "doc_id") is docs
-
-    def test_env_toggle_off(self, spark, monkeypatch):
-        from neo4j_spark.ml.dedup import widen_under_split
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "0")
-        docs = self._docs(spark, 1)
-        assert widen_under_split(docs, "doc_id") is docs
-
-    def test_minhash_results_identical_widened(self, spark, monkeypatch):
-        from neo4j_spark.ml.dedup import minhash_dedup_pairs
-        docs = self._docs(spark, 1)
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "0")
-        off = sorted(map(tuple,
-                         minhash_dedup_pairs(docs, threshold=0.5).collect()))
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "1")
-        on = sorted(map(tuple,
-                        minhash_dedup_pairs(docs, threshold=0.5).collect()))
-        assert on == off and len(on) > 0
-        # the widened pipeline really carries the redistribution
-        plan = plan_of(minhash_dedup_pairs(docs, threshold=0.5))
-        assert "REPARTITION_BY_NUM" in plan, plan
-
-    def test_cosine_pairs_widened_and_identical(self, spark, monkeypatch):
-        from neo4j_spark.ml.similarity import embedding_cosine_pairs
-        rows = [(i, [float(i % 4 == 0), 1.0, float(i % 3) / 3.0])
-                for i in range(40)]
-        emb = spark.createDataFrame(rows, ["vec_id", "embedding"]) \
-                   .coalesce(1)
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "0")
-        off = sorted(map(tuple,
-                         embedding_cosine_pairs(emb, 0.9).collect()))
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "1")
-        on = sorted(map(tuple,
-                        embedding_cosine_pairs(emb, 0.9).collect()))
-        assert on == off and len(on) > 0
-        plan = plan_of(embedding_cosine_pairs(emb, 0.9))
-        assert "REPARTITION_BY_NUM" in plan, plan
-
-    def test_ngram_jaccard_widened_and_identical(self, spark, monkeypatch):
-        from neo4j_spark.ml.dedup import ngram_jaccard_pairs
-        rows = [(i, f"w{i // 2 % 5} alpha beta gamma delta epsilon", "en")
-                for i in range(40)]
-        docs = spark.createDataFrame(rows, ["doc_id", "text", "lang"]) \
-                    .coalesce(1)
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "0")
-        off = sorted(map(tuple, ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", 3, 0.5).collect()))
-        monkeypatch.setenv("NEO4J_SPARK_WIDEN_SPLITS", "1")
-        on = sorted(map(tuple, ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", 3, 0.5).collect()))
-        assert on == off and len(on) > 0
-        plan = plan_of(ngram_jaccard_pairs(docs, "doc_id", "text",
-                                           "lang", 3, 0.5))
-        assert "REPARTITION_BY_NUM" in plan, plan

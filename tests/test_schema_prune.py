@@ -8,14 +8,11 @@ equivalence pruned vs unpruned, and (4) the conservatism rules (mutated
 labels / missing declarations disable pruning).
 """
 
-import os
-
 import pytest
 
 from neo4j_spark.api import cypher
 from neo4j_spark.cypher import ast as A
-from neo4j_spark.operators.schema_prune import (flipped, level_type_sets,
-                                                shared_sets)
+from neo4j_spark.operators.schema_prune import flipped, level_type_sets
 
 
 def _rp(direction="out", min_len=1, max_len=3, types=()):
@@ -70,19 +67,6 @@ class TestClosure:
         sets = level_type_sets(g, _rp(max_len=3), ["Customer"], ["Region"], 3)
         assert sets is not None and "PLACED" in sets[0]
 
-    def test_env_kill_switch(self, tpch_graph):
-        os.environ["NEO4J_SPARK_SCHEMA_PRUNE"] = "0"
-        try:
-            assert level_type_sets(tpch_graph, _rp(),
-                                   ["Customer"], ["Region"], 3) is None
-        finally:
-            os.environ["NEO4J_SPARK_SCHEMA_PRUNE"] = "1"
-
-    def test_shared_sets_union(self):
-        sets = [frozenset({"A"}), frozenset({"B"}), frozenset()]
-        assert shared_sets(sets) == [frozenset({"A", "B"}),
-                                     frozenset({"A", "B"}), frozenset()]
-
 
 QUERIES = [
     "MATCH (c:Customer) MATCH p = shortestPath((c)-[*..3]->(r:Region)) "
@@ -99,16 +83,14 @@ QUERIES = [
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_pruned_equals_unpruned(spark, tpch_graph, q):
-    def run():
-        return sorted(map(str, cypher(spark, q, tpch_graph).collect()))
+    def run(g):
+        return sorted(map(str, cypher(spark, q, g).collect()))
 
-    pruned = run()
-    os.environ["NEO4J_SPARK_SCHEMA_PRUNE"] = "0"
-    try:
-        unpruned = run()
-    finally:
-        os.environ["NEO4J_SPARK_SCHEMA_PRUNE"] = "1"
-    assert pruned == unpruned
+    # without endpoint declarations nothing prunes
+    # (test_no_pruning_without_metadata): the unpruned reference
+    unpruned_graph = tpch_graph.copy()
+    unpruned_graph.rel_endpoint_labels = {}
+    assert run(tpch_graph) == run(unpruned_graph)
 
 
 class TestPlanElision:
