@@ -86,8 +86,6 @@ def _run(spark: SparkSession, query: str, graph,
     ast = ast_cache.get(body)
     if ast is None:
         ast = ast_cache[body] = parse(body)
-    if graph is not None:
-        graph.begin_scan_tracking()  # statement-scoped shared-base fusion
     if mode == "EXPLAIN":
         # EXPLAIN returns the query's result COLUMNS with zero rows and
         # performs NO side effects (ExplainAcceptance.feature) — writes

@@ -1481,29 +1481,23 @@ class Translator:
             return None
 
         cnt_col = self._anon_var("pacnt")
-        extras: dict = {}
         new_proj = self._preagg_rewrite_counts(nxt, cnt_vars, cnt_col,
-                                               allow_count_star=False,
-                                               rel_var=rp.var, extras=extras)
+                                               allow_count_star=False)
         if new_proj is None:
             return None
 
-        # per-source counts (and min/max over the rel's own props) over
-        # the (shard-pruned) rel scan; groupBy on the edge end does
-        # partial map-side aggregation, so the exchange carries
-        # (id, count[, min/max scalars]) only
+        # per-source counts over the (shard-pruned) rel scan; groupBy on
+        # the edge end does partial map-side aggregation, so the
+        # exchange carries (id, count) only
         left_lbls = (list(a_pat.labels) if a_pat.labels
                      else self.labels_of(a_pat.var if bound_l else None))
         right_lbls = (list(b_pat.labels) if b_pat.labels
                       else self.labels_of(b_pat.var if bound_r else None))
-        scan = self._rel_scan(rp, "__pa_r", slim=not extras,
+        scan = self._rel_scan(rp, "__pa_r", slim=True,
                               left_labels=left_lbls, right_labels=right_lbls)
-        extra_aggs = self._preagg_extra_aggs(scan, "__pa_r", extras)
-        if extra_aggs is None:
-            return None
         key = "__from" if bound_l else "__to"
         per = scan.groupBy(F.col(key).alias("__pa_k")).agg(
-            F.count(F.lit(1)).alias(cnt_col), *extra_aggs)
+            F.count(F.lit(1)).alias(cnt_col))
         out = (df.join(per,
                        F.col(bnd.var).getField("_id") == F.col("__pa_k"),
                        "left")
@@ -1511,30 +1505,15 @@ class Translator:
                  .withColumn(cnt_col, F.coalesce(F.col(cnt_col),
                                                  F.lit(0).cast("long"))))
         self.kinds[cnt_col] = "scalar"
-        for c in extras.values():
-            self.kinds[c] = "scalar"
         return out, new_proj
 
     def _preagg_rewrite_counts(self, nxt, cnt_vars, cnt_col: str,
-                               allow_count_star: bool,
-                               rel_var: Optional[str] = None,
-                               extras: Optional[dict] = None):
+                               allow_count_star: bool):
         """Rewrite a Projection for count pre-aggregation: every
         ``count(v)`` (non-distinct, v in ``cnt_vars``) — and, when
         ``allow_count_star`` (inner-join variant, where each source row's
         multiplicity IS its per-source count), ``count(*)`` — becomes
         ``sum(cnt_col)``.
-
-        When ``rel_var``/``extras`` are given, duplicate-insensitive
-        ``min(r.p)`` / ``max(r.p)`` over the pre-aggregated rel's OWN
-        properties also rewrite: the per-source min/max is computed on
-        the rel scan (``extras`` maps (fn, prop) -> generated column) and
-        the outer aggregate folds it — min/max are associative under any
-        total order, so min-of-per-source-mins equals the global min
-        regardless of outer-row multiplicity, and an unmatched outer row
-        contributes a null the outer min/max skips (Cypher min over no
-        rows is null, matching).  DISTINCT min/max are value-identical to
-        their plain forms, so both are admitted.
 
         Returns the rewritten Projection, or None when
         the rewrite is unsound: no rewritable count at all, any OTHER
@@ -1558,16 +1537,6 @@ class Translator:
                     # wraps coalesce), so the empty-group case matches
                     # count()'s 0
                     return A.Func("sum", [A.Var(cnt_col)])
-                if (node.name in ("min", "max") and len(node.args) == 1
-                        and extras is not None and rel_var is not None
-                        and isinstance(node.args[0], A.Prop)
-                        and isinstance(node.args[0].subject, A.Var)
-                        and node.args[0].subject.name == rel_var):
-                    key = (node.name, node.args[0].key)
-                    col = extras.setdefault(
-                        key, f"{cnt_col}_{node.name}{len(extras)}")
-                    state["n"] += 1
-                    return A.Func(node.name, [A.Var(col)])
                 if is_agg_fn(node.name):
                     # any other aggregate observes the join's multiplicity
                     state["ok"] = False
@@ -1746,10 +1715,8 @@ class Translator:
                 return None
 
         cnt_col = self._anon_var("pacnt")
-        extras: dict = {}
         new_proj = self._preagg_rewrite_counts(nxt, cnt_vars, cnt_col,
-                                               allow_count_star=True,
-                                               rel_var=rp.var, extras=extras)
+                                               allow_count_star=True)
         if new_proj is None:
             return None
 
@@ -1780,48 +1747,15 @@ class Translator:
                      else self.labels_of(
                          conn_var if conn_var in pre.columns else None))
         right_lbls = list(b_pat.labels) if b_pat.labels else None
-        scan = self._rel_scan(rp, "__pa_r", slim=not extras,
+        scan = self._rel_scan(rp, "__pa_r", slim=True,
                               left_labels=left_lbls,
                               right_labels=right_lbls)
-        extra_aggs = self._preagg_extra_aggs(scan, "__pa_r", extras)
-        if extra_aggs is None:
-            return None
         per = scan.groupBy(F.col("__from").alias("__pa_k")).agg(
-            F.count(F.lit(1)).alias(cnt_col), *extra_aggs)
+            F.count(F.lit(1)).alias(cnt_col))
         out = (pre.join(per, key == F.col("__pa_k"))
                   .drop("__pa_k", "__preagg_key"))
         self.kinds[cnt_col] = "scalar"
-        for c in extras.values():
-            self.kinds[c] = "scalar"
         return out, new_proj
-
-    def _preagg_extra_aggs(self, scan: DataFrame, struct_col: str,
-                           extras: dict) -> Optional[list]:
-        """Per-source min/max aggregate columns for the pre-agg rewrites.
-
-        ``extras`` maps (fn, prop) -> output column.  Bails (None) when a
-        requested property is not a field of the rel struct (the generic
-        lowering's missing-property null semantics must win) or its type
-        is an AnyValue-tagged union (plain F.min/F.max would order tagged
-        nulls instead of skipping them; _compile_aggregate nullifies them
-        first, so the per-source fold would diverge)."""
-        if not extras:
-            return []
-        from . import anyvalue as AV
-        from pyspark.sql import types as T
-
-        st = scan.schema[struct_col].dataType
-        assert isinstance(st, T.StructType)
-        fields = {f.name: f.dataType for f in st.fields}
-        out = []
-        for (fn, prop), col in extras.items():
-            t = fields.get(prop)
-            if t is None or AV.is_any_type(t):
-                return None
-            src = F.col(struct_col).getField(prop)
-            out.append((F.min(src) if fn == "min" else F.max(src))
-                       .alias(col))
-        return out
 
     def _preagg_pattern_sub(self, cur_df: DataFrame, parts, where):
         """Shared fast-path gate for EXISTS{}/COUNT{} pattern subqueries
@@ -1840,14 +1774,7 @@ class Translator:
         rows; and the outer id set is never broadcast, which at scale it
         could not be).  Soundness gates mirror
         :meth:`_preagg_optional_count` exactly (probe-verified there,
-        incl. the undirected bare-fresh case).
-
-        An inner WHERE (clause-level or ``[r:T WHERE ...]``) is admitted
-        when it references ONLY the rel variable itself: the predicate
-        compiles against the scan's full rel struct — the same struct
-        the generic lowering would bind — and filters the scan before
-        the aggregate, so it pushes into the parquet read instead of
-        forcing the build-from-outer-rows join."""
+        incl. the undirected bare-fresh case)."""
         if len(parts) != 1:
             return None
         part = parts[0]
@@ -1863,8 +1790,7 @@ class Translator:
             return None
         if rp.var_length or rp.props is not None:
             return None
-        preds = [p for p in (where, rp.where) if p is not None]
-        if preds and not all(self._rel_only_pred(p, rp.var) for p in preds):
+        if where is not None or rp.where is not None:
             return None
         if rp.var is not None and rp.var in cur_df.columns:
             return None  # re-bound rel var: ProjectEndpoints semantics
@@ -1912,13 +1838,9 @@ class Translator:
                      else self.labels_of(a_pat.var if bound_l else None))
         right_lbls = (list(b_pat.labels) if b_pat.labels
                       else self.labels_of(b_pat.var if bound_r else None))
-        scan = self._rel_scan(rp, "__pa_r", slim=not preds,
+        scan = self._rel_scan(rp, "__pa_r", slim=True,
                               left_labels=left_lbls,
                               right_labels=right_lbls)
-        if preds:
-            scan = self._filter_rel_scan(scan, rp.var, preds)
-            if scan is None:
-                return None
         key = "__from" if bound_l else "__to"
         return scan, key, bnd.var
 
@@ -1935,78 +1857,6 @@ class Translator:
         if isinstance(e, A.Prop):
             return isinstance(e.subject, A.Var)
         return False
-
-    def _rel_only_pred(self, e, rv: Optional[str]) -> bool:
-        """True when expression ``e`` references no variable other than
-        the rel var ``rv`` and contains no construct whose compilation
-        could reach beyond the rel struct (nested patterns, subqueries,
-        local-binder comprehensions, aggregates)."""
-        import dataclasses as _dc
-
-        ok = {"v": True}
-
-        def walk(node):
-            if not ok["v"]:
-                return
-            if isinstance(node, A.Var):
-                if rv is None or node.name != rv:
-                    ok["v"] = False
-                return
-            if isinstance(node, A.MapProjection):
-                if rv is None or node.var != rv:
-                    ok["v"] = False
-                    return
-            if isinstance(node, (A.NodePat, A.RelPat, A.PatternPred,
-                                 A.ExistsSub, A.CollectSub, A.CountSub,
-                                 A.ShortestPathExpr, A.PatternComp,
-                                 A.ListComp, A.Quantifier, A.Reduce,
-                                 A.CountStar)):
-                ok["v"] = False
-                return
-            if isinstance(node, A.Func) and is_agg_fn(node.name):
-                ok["v"] = False
-                return
-            if _dc.is_dataclass(node) and not isinstance(node, type):
-                for f in _dc.fields(node):
-                    v = getattr(node, f.name)
-                    for x in (v if isinstance(v, (list, tuple)) else [v]):
-                        if isinstance(x, tuple):
-                            for y in x:
-                                if _dc.is_dataclass(y):
-                                    walk(y)
-                        elif _dc.is_dataclass(x):
-                            walk(x)
-
-        walk(e)
-        return ok["v"]
-
-    def _filter_rel_scan(self, scan: DataFrame, rv: Optional[str],
-                         preds) -> Optional[DataFrame]:
-        """Compile rel-only predicates against the scan's full struct
-        (bound under the rel var's name, kind 'rel' — the same binding
-        the generic lowering gives it) and filter.  Returns None when
-        compilation falls outside the supported surface, sending the
-        caller back to the generic lowering."""
-        tmp = scan.withColumnRenamed("__pa_r", rv) if rv else scan
-        saved = self.kinds.get(rv) if rv else None
-        if rv:
-            self.kinds[rv] = "rel"
-        try:
-            cc = self._compiler(tmp)
-            cond = None
-            for p in preds:
-                c = cc.compile(p)
-                cond = c if cond is None else cond & c
-            tmp = tmp.filter(cond)
-        except TranslateError:
-            return None
-        finally:
-            if rv:
-                if saved is None:
-                    self.kinds.pop(rv, None)
-                else:
-                    self.kinds[rv] = saved
-        return tmp.withColumnRenamed(rv, "__pa_r") if rv else tmp
 
     def _implied_end_label(self, t: str, end_idx: int,
                            pat_labels) -> Optional[str]:
@@ -2142,17 +1992,6 @@ class Translator:
             base = typed(right_labels, left_labels)
         else:
             base = typed()
-        # shared-base fusion: count which declared-base shards this scan
-        # touches; a second touch within the statement persists the base
-        # so every shard reads ONE FileScan (graph.note_rel_scan)
-        if rp.types:
-            touched = list(rp.types)
-        elif rp.neg_types:
-            touched = [t for t in self.graph.rel_frames
-                       if t not in rp.neg_types]
-        else:
-            touched = list(self.graph.rel_frames)
-        self.graph.note_rel_scan(touched)
         props = [c for c in base.columns if c not in REL_META]
         if slim:
             struct = F.struct(F.col("id").alias("_id"))

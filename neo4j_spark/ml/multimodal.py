@@ -90,7 +90,7 @@ def resize_images(decoded: DataFrame, target: int = 224) -> DataFrame:
 
     STUB kernel: rescales the metadata (and keeps the feature vector) —
     in production the batch holds pixel buffers and the kernel calls a
-    vectorized resize; the Spark plumbing (schema, Arrow batching) is what
+    batched resize; the Spark plumbing (schema, Arrow batching) is what
     this exercises."""
 
     def batch_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

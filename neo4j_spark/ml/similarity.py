@@ -55,23 +55,47 @@ def knn_bruteforce(df: DataFrame, query_vec: Sequence[float],
               .limit(k))
 
 
+def _vector_batches(x: pd.Series, y: pd.Series):
+    """Both sides of one Arrow batch of vector pairs as (rows, dim)
+    float64 matrices.  A batch outside the cosine kernel's contract
+    raises a ValueError that names the cause (a null vector, or two
+    differing dimensions) instead of numpy's shape error; valid batches
+    pay nothing for the check."""
+    try:
+        A = np.stack(x.values).astype(np.float64)
+        B = np.stack(y.values).astype(np.float64)
+        if A.ndim == B.ndim == 2 and A.shape[1] == B.shape[1]:
+            return A, B
+    except (ValueError, TypeError):
+        pass
+    vecs = [*x.values, *y.values]
+    if any(v is None for v in vecs):
+        raise ValueError(
+            "cosine kernel: null vector (vectors must be non-null)")
+    dims = sorted({len(v) for v in vecs})
+    if len(dims) > 1:
+        raise ValueError(f"cosine kernel: ragged vectors, dimensions "
+                         f"{dims[0]} and {dims[1]} differ")
+    raise ValueError("cosine kernel: input is not a batch of "
+                     "fixed-dimension vectors")
+
+
 def _cosine_pandas(a: Column, b: Column) -> Column:
-    """Arrow-vectorized cosine: one numpy matmul per batch instead of an
+    """Arrow-batched cosine: one numpy matmul per batch instead of an
     interpreted HOF fold per row — the per-row cost that dominates a
     quadratic k-NN join at scale (~10-100x over CodegenFallback HOFs).
 
     Input contract (the embeddings tables guarantee it): fixed-dimension,
-    non-null vectors.  A null or ragged vector fails np.stack (task
-    error) where the HOF form yielded null; a zero vector scores 0.0
-    here vs IEEE NaN from the HOF's 0/0 — NaN compares GREATER than any
+    non-null vectors.  A null or ragged vector fails the task with a
+    ValueError naming it; a zero vector scores 0.0 here vs IEEE NaN from
+    the HOF :func:`cosine`'s 0/0 — NaN compares GREATER than any
     threshold in Spark, so the HOF form would emit such a pair.  Both
     are kernel-wide semantics shared with the graded exact k-NN join."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def pcos(x: pd.Series, y: pd.Series) -> pd.Series:
-        A = np.stack(x.values).astype(np.float64)
-        B = np.stack(y.values).astype(np.float64)
+        A, B = _vector_batches(x, y)
         num = np.einsum("ij,ij->i", A, B)
         den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
         return pd.Series(np.where(den > 0, num / den, 0.0))
@@ -82,18 +106,14 @@ def _cosine_pandas(a: Column, b: Column) -> Column:
 def knn_join_bruteforce(queries: DataFrame, corpus: DataFrame, k: int = 10,
                         q_id: str = "vec_id", q_vec: str = "embedding",
                         c_id: str = "vec_id", c_vec: str = "embedding",
-                        metric: str = "cosine",
-                        vectorized: bool = True) -> DataFrame:
+                        metric: str = "cosine") -> DataFrame:
     """Exact k-NN join (every query x corpus): crossJoin + per-query window
     top-k.  Quadratic — the correctness baseline the LSH path is graded
-    against.  ``vectorized``: cosine via an Arrow-batched pandas UDF
-    (numpy matmul) instead of per-row HOFs."""
+    against.  Cosine runs through the Arrow-batched numpy kernel."""
     qd = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
     cd = corpus.select(F.col(c_id).alias("neighbor_id"), F.col(c_vec).alias("_cv"))
-    if metric == "cosine" and vectorized:
+    if metric == "cosine":
         score = _cosine_pandas(F.col("_qv"), F.col("_cv"))
-    elif metric == "cosine":
-        score = cosine(F.col("_qv"), F.col("_cv"))
     else:
         score = -euclidean(F.col("_qv"), F.col("_cv"))
     scored = qd.crossJoin(cd).select(

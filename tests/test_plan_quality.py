@@ -171,11 +171,10 @@ def test_translate_has_no_driver_collect():
 
 class TestSharedBaseFusion:
     """CONTAINS and SUPPLIED_BY are row images of one lineitem table
-    (FIXTURES.md): with neo4j_spark.scan.fuseSharedBases=true a
-    statement touching both persists the shared base so every shard is
-    served from ONE FileScan; by default each shard keeps its own
-    pruned, filter-pushed scan (measured faster when Catalyst prunes
-    the rel-id window away — see PropertyGraph.note_rel_scan)."""
+    (FIXTURES.md); a statement touching both still gives each shard its
+    own pruned, filter-pushed scan, and Catalyst prunes the rel-id
+    window away when the ids are unused (PERF.md: persisting the shared
+    base instead measured slower)."""
 
     Q = ("MATCH (s:Supplier)<-[sb:SUPPLIED_BY]-(o:Order)"
          "-[l:CONTAINS]->(:Part) WHERE sb.linenumber = l.linenumber "
@@ -191,32 +190,3 @@ class TestSharedBaseFusion:
         # unused — it would force a full lineitem shuffle per scan
         assert "Window" not in plan
         assert rows_default  # non-empty at sf0.001+
-
-    def test_fusion_conf_serves_shards_from_cache(self, spark, tpch_graph):
-        spark.conf.set("neo4j_spark.scan.fuseSharedBases", "true")
-        try:
-            df = cypher(spark, self.Q, tpch_graph)
-            rows_fused = [tuple(r) for r in df.collect()]
-            assert "InMemoryTableScan" in plan_of(df)
-            assert "lineitem" in tpch_graph._persisted_bases
-            # same answer either way
-            df2 = cypher(spark, self.Q, tpch_graph)
-            assert rows_fused == [tuple(r) for r in df2.collect()]
-        finally:
-            spark.conf.unset("neo4j_spark.scan.fuseSharedBases")
-            base, _ = tpch_graph.rel_shared_bases["lineitem"]
-            base.unpersist()
-            tpch_graph._persisted_bases.discard("lineitem")
-
-    def test_single_shard_statement_never_persists(self, spark,
-                                                   tpch_graph):
-        spark.conf.set("neo4j_spark.scan.fuseSharedBases", "true")
-        try:
-            df = cypher(spark,
-                        "MATCH (o:Order)-[l:CONTAINS]->(:Part) "
-                        "RETURN sum(l.quantity) AS q", tpch_graph)
-            df.collect()
-            assert "lineitem" not in tpch_graph._persisted_bases
-            assert "InMemoryTableScan" not in plan_of(df)
-        finally:
-            spark.conf.unset("neo4j_spark.scan.fuseSharedBases")

@@ -1,8 +1,7 @@
-"""Round-9 optimization pins: min/max pre-aggregation through the
-OPTIONAL/trailing count rewrites, the EXISTS/COUNT subquery rel-prop
-WHERE pushdown, and key-prop elision over sharded endpoints.  Each test
-guards a rewrite that would silently regress (results would stay correct
-but the pruned scans/shuffles would re-grow)."""
+"""Round-9 optimization pins: the EXISTS/COUNT subquery pre-aggregation
+gates, key-prop elision over sharded endpoints, and the Arrow cosine
+kernel.  Each test guards a rewrite that would silently regress (results
+would stay correct but the pruned scans/shuffles would re-grow)."""
 
 import pytest
 
@@ -13,130 +12,11 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-class TestPreaggMinMax:
-    """min/max over the pre-aggregated rel's OWN properties fold through
-    the count pre-agg rewrites: per-source F.min/F.max on the rel scan,
-    outer min/max of the per-source values (associative under any total
-    order, so outer-row multiplicity cannot change the result)."""
-
-    @staticmethod
-    def _fired(spark, tpch_graph, q):
-        """Translate q with a spy on the extras hook; returns whether the
-        min/max pre-agg path fired."""
-        from neo4j_spark.cypher import translate as TR
-
-        orig = TR.Translator._preagg_extra_aggs
-        hit = {"v": False}
-
-        def spy(self, scan, sc, extras):
-            r = orig(self, scan, sc, extras)
-            if extras and r is not None:
-                hit["v"] = True
-            return r
-
-        TR.Translator._preagg_extra_aggs = spy
-        try:
-            df = cypher(spark, q, tpch_graph)
-        finally:
-            TR.Translator._preagg_extra_aggs = orig
-        return hit["v"], df
-
-    def test_optional_plan_preaggregates_min(self, spark, tpch_graph):
-        fired, df = self._fired(
-            spark, tpch_graph,
-            "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
-            "RETURN o.orderkey AS ok, min(l.quantity) AS mn, "
-            "count(l) AS n")
-        assert fired
-        plan = plan_of(df)
-        # the fresh endpoint/part frame is elided and the lineitem scan
-        # reads exactly the join key + the min/max prop
-        assert "part.parquet" not in plan
-        read = [l for l in plan.splitlines()
-                if "lineitem" in l and "FileScan" in l]
-        assert read and "l_quantity" in read[0]
-        # no full-width lineitem columns cross
-        assert "l_extendedprice" not in read[0]
-
-    def test_trailing_plan_preaggregates_max(self, spark, tpch_graph):
-        fired, df = self._fired(
-            spark, tpch_graph,
-            "MATCH (c:Customer)-[:PLACED]->(o:Order)"
-            "-[l:CONTAINS]->(p) "
-            "RETURN c.custkey AS ck, count(*) AS n, "
-            "max(l.quantity) AS mx")
-        assert fired
-        plan = plan_of(df)
-        read = [l for l in plan.splitlines()
-                if "lineitem" in l and "FileScan" in l]
-        assert read and "l_quantity" in read[0]
-        assert "l_extendedprice" not in read[0]
-
-    def test_results_match_unrewritten(self, spark, tpch_graph):
-        from neo4j_spark.cypher import translate as TR
-
-        queries = [
-            "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
-            "RETURN o.orderkey AS ok, min(l.quantity) AS mn, count(l) AS n "
-            "ORDER BY ok LIMIT 25",
-            "MATCH (p:Part) OPTIONAL MATCH (p)<-[l:CONTAINS]-(o:Order) "
-            "RETURN p.partkey AS pk, max(l.extendedprice) AS mx "
-            "ORDER BY pk LIMIT 25",
-            "MATCH (c:Customer)-[:PLACED]->(o:Order)-[l:CONTAINS]->(p) "
-            "RETURN c.custkey AS ck, min(l.shipdate) AS d, count(*) AS n "
-            "ORDER BY ck LIMIT 25",
-            # min over empty optional group must stay null
-            "MATCH (r:Region) OPTIONAL MATCH (r)-[l:CONTAINS]->(q) "
-            "RETURN r.name AS nm, min(l.quantity) AS mn ORDER BY nm",
-        ]
-        orig_o = TR.Translator._preagg_optional_count
-        orig_t = TR.Translator._preagg_trailing_count
-        try:
-            for q in queries:
-                on = sorted(map(tuple, cypher(spark, q, tpch_graph).collect()))
-                TR.Translator._preagg_optional_count = \
-                    lambda self, df, m, nxt: None
-                TR.Translator._preagg_trailing_count = \
-                    lambda self, df, m, nxt: None
-                off = sorted(map(tuple, cypher(spark, q, tpch_graph).collect()))
-                TR.Translator._preagg_optional_count = orig_o
-                TR.Translator._preagg_trailing_count = orig_t
-                assert on == off, q
-        finally:
-            TR.Translator._preagg_optional_count = orig_o
-            TR.Translator._preagg_trailing_count = orig_t
-
-    def test_bails_on_non_rel_or_expr_args(self, spark, tpch_graph):
-        """Node-prop / expression / missing-prop min args must leave the
-        generic lowering in place (the plan keeps the part scan join)."""
-        for q in [
-            # node prop: needs the part frame, not pre-aggregable
-            "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
-            "RETURN o.orderkey AS ok, min(p.retailprice) AS mn",
-            # expression arg
-            "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
-            "RETURN o.orderkey AS ok, min(l.quantity + 1) AS mn",
-            # missing prop: generic null semantics must win
-            "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
-            "RETURN o.orderkey AS ok, min(l.nosuchprop) AS mn",
-        ]:
-            fired, _ = self._fired(spark, tpch_graph, q)
-            assert not fired, q
-
-    def test_min_distinct_fires(self, spark, tpch_graph):
-        # min(DISTINCT x) is value-identical to min(x): both admitted
-        fired, _ = self._fired(
-            spark, tpch_graph,
-            "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
-            "RETURN o.orderkey AS ok, min(DISTINCT l.quantity) AS mn")
-        assert fired
-
-
 class TestPatternSubRelPropWhere:
-    """EXISTS{}/COUNT{} subqueries whose inner WHERE references only the
-    rel's own properties keep the pre-aggregated fast path: the predicate
-    compiles against the scan's rel struct and pushes into the parquet
-    read instead of forcing the build-from-outer-rows lowering."""
+    """Gates of the EXISTS{}/COUNT{} pre-aggregated fast path: a sharded
+    endpoint pinned to one label keeps it, while any inner WHERE sends
+    the subquery to the generic build-from-outer-rows lowering (whose
+    results :func:`test_generic_lowering_matches_duckdb` checks)."""
 
     @staticmethod
     def _fired(spark, tpch_graph, q):
@@ -157,55 +37,6 @@ class TestPatternSubRelPropWhere:
         finally:
             Translator._preagg_pattern_sub = orig
         return hit["v"], df
-
-    def test_rel_prop_where_fires_and_pushes(self, spark, tpch_graph):
-        fired, df = self._fired(
-            spark, tpch_graph,
-            "MATCH (o:Order) RETURN o.orderkey AS k, "
-            "COUNT { (o)-[l:CONTAINS]->() WHERE l.quantity > 25 } AS n")
-        assert fired
-        plan = plan_of(df)
-        scans = [l for l in plan.splitlines()
-                 if "lineitem" in l and "FileScan" in l]
-        assert scans and "l_quantity" in scans[0]
-        # the predicate reaches the scan's data filters
-        assert "DataFilters: [" in scans[0]
-        assert "l_quantity" in scans[0].split("DataFilters:")[1].split(
-            "Format:")[0]
-
-    def test_relpat_where_form_fires(self, spark, tpch_graph):
-        fired, _ = self._fired(
-            spark, tpch_graph,
-            "MATCH (o:Order) RETURN o.orderkey AS k, "
-            "COUNT { (o)-[l:CONTAINS WHERE l.quantity > 25]->() } AS n")
-        assert fired
-
-    def test_results_match_unrewritten(self, spark, tpch_graph):
-        from neo4j_spark.cypher.translate import Translator
-
-        queries = [
-            "MATCH (o:Order) RETURN o.orderkey AS k, "
-            "COUNT { (o)-[l:CONTAINS]->() WHERE l.quantity > 25 } AS n "
-            "ORDER BY k LIMIT 25",
-            "MATCH (o:Order) WHERE EXISTS { (o)-[l:CONTAINS]->(:Part) "
-            "WHERE l.tax > 0.05 } RETURN count(*) AS n",
-            # missing prop: predicate is null, matches nothing
-            "MATCH (o:Order) RETURN o.orderkey AS k, "
-            "COUNT { (o)-[l:CONTAINS]->() WHERE l.nosuch > 1 } AS n "
-            "ORDER BY k LIMIT 25",
-        ]
-        orig = Translator._preagg_pattern_sub
-        try:
-            for q in queries:
-                on = sorted(map(tuple, cypher(spark, q, tpch_graph).collect()))
-                Translator._preagg_pattern_sub = \
-                    lambda self, cur_df, parts, where: None
-                off = sorted(map(tuple,
-                                 cypher(spark, q, tpch_graph).collect()))
-                Translator._preagg_pattern_sub = orig
-                assert on == off, q
-        finally:
-            Translator._preagg_pattern_sub = orig
 
     def test_sharded_endpoint_label_fires(self, spark, tpch_graph):
         """A COUNT{} whose fresh endpoint pins ONE alternative of a
@@ -236,6 +67,101 @@ class TestPatternSubRelPropWhere:
         ]:
             fired, _ = self._fired(spark, tpch_graph, q)
             assert not fired, q
+
+
+# Shapes the count pre-aggregations and the COUNT{}/EXISTS{} fast path
+# leave to the generic lowering (a min/max beside or instead of count(),
+# an inner WHERE), each paired with its DuckDB reading over the same
+# parquet: every Order's lineitems are its CONTAINS rels to Part.
+GENERIC_SHAPES = {
+    "optional_min_and_count": (
+        "MATCH (o:Order) OPTIONAL MATCH (o)-[l:CONTAINS]->(p:Part) "
+        "RETURN o.orderkey AS ok, min(l.quantity) AS mn, count(l) AS n "
+        "ORDER BY ok LIMIT 25",
+        "SELECT o_orderkey AS ok, min(l_quantity) AS mn, "
+        "count(l_orderkey) AS n FROM orders LEFT JOIN "
+        "(lineitem JOIN part ON p_partkey = l_partkey) "
+        "ON l_orderkey = o_orderkey GROUP BY o_orderkey "
+        "ORDER BY ok LIMIT 25"),
+    "optional_max_incoming": (
+        "MATCH (p:Part) OPTIONAL MATCH (p)<-[l:CONTAINS]-(o:Order) "
+        "RETURN p.partkey AS pk, max(l.extendedprice) AS mx "
+        "ORDER BY pk LIMIT 25",
+        "SELECT p_partkey AS pk, max(l_extendedprice) AS mx FROM part "
+        "LEFT JOIN (lineitem JOIN orders ON o_orderkey = l_orderkey) "
+        "ON l_partkey = p_partkey GROUP BY p_partkey ORDER BY pk LIMIT 25"),
+    "trailing_min_date_and_count": (
+        "MATCH (c:Customer)-[:PLACED]->(o:Order)-[l:CONTAINS]->(p) "
+        "RETURN c.custkey AS ck, min(l.shipdate) AS d, count(*) AS n "
+        "ORDER BY ck LIMIT 25",
+        "SELECT c_custkey AS ck, min(l_shipdate) AS d, count(*) AS n "
+        "FROM customer JOIN orders ON o_custkey = c_custkey "
+        "JOIN lineitem ON l_orderkey = o_orderkey "
+        "JOIN part ON p_partkey = l_partkey "
+        "GROUP BY c_custkey ORDER BY ck LIMIT 25"),
+    "optional_min_over_no_rows": (
+        "MATCH (r:Region) OPTIONAL MATCH (r)-[l:CONTAINS]->(q) "
+        "RETURN r.name AS nm, min(l.quantity) AS mn ORDER BY nm",
+        "SELECT r_name AS nm, CAST(NULL AS DOUBLE) AS mn FROM region "
+        "ORDER BY nm"),
+    "count_sub_rel_prop_where": (
+        "MATCH (o:Order) RETURN o.orderkey AS k, "
+        "COUNT { (o)-[l:CONTAINS]->() WHERE l.quantity > 25 } AS n "
+        "ORDER BY k LIMIT 25",
+        "SELECT o_orderkey AS k, (SELECT count(*) FROM lineitem "
+        "JOIN part ON p_partkey = l_partkey WHERE l_orderkey = o_orderkey "
+        "AND l_quantity > 25) AS n FROM orders ORDER BY k LIMIT 25"),
+    "exists_sub_rel_prop_where": (
+        "MATCH (o:Order) WHERE EXISTS { (o)-[l:CONTAINS]->(:Part) "
+        "WHERE l.tax > 0.05 } RETURN count(*) AS n",
+        "SELECT count(*) AS n FROM orders WHERE EXISTS (SELECT 1 FROM "
+        "lineitem JOIN part ON p_partkey = l_partkey "
+        "WHERE l_orderkey = o_orderkey AND l_tax > 0.05)"),
+    # a missing property is null, so the predicate matches nothing
+    "count_sub_missing_prop_where": (
+        "MATCH (o:Order) RETURN o.orderkey AS k, "
+        "COUNT { (o)-[l:CONTAINS]->() WHERE l.nosuch > 1 } AS n "
+        "ORDER BY k LIMIT 25",
+        "SELECT o_orderkey AS k, 0 AS n FROM orders ORDER BY k LIMIT 25"),
+}
+
+
+@pytest.fixture(scope="module")
+def tpch_duck(tpch_graph):
+    """DuckDB views over the same parquet files the tpch graph reads."""
+    import os
+    from urllib.parse import urlparse
+
+    import duckdb
+
+    sf_dir = os.path.dirname(urlparse(
+        tpch_graph.node_frames["Region"].inputFiles()[0]).path)
+    con = duckdb.connect()
+    for t in ("region", "customer", "part", "orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{t}.parquet')")
+    yield con
+    con.close()
+
+
+def _cell(v):
+    if isinstance(v, float):
+        return round(v, 9)
+    if hasattr(v, "isoformat"):
+        return v.isoformat()[:26]
+    return v
+
+
+@pytest.mark.parametrize("shape", sorted(GENERIC_SHAPES))
+def test_generic_lowering_matches_duckdb(spark, tpch_graph, tpch_duck,
+                                         shape):
+    q, sql = GENERIC_SHAPES[shape]
+    df = cypher(spark, q, tpch_graph)
+    got = [tuple(_cell(v) for v in r) for r in df.collect()]
+    res = tpch_duck.execute(sql)
+    want = [tuple(_cell(v) for v in r) for r in res.fetchall()]
+    assert df.columns == [d[0] for d in res.description]
+    assert got and got == want
 
 
 class TestSizePatternCompPreagg:
@@ -594,3 +520,20 @@ class TestEmbeddingCosinePairsVectorized:
         assert "BatchEvalPython" not in plan, plan
         got = [(r.id_a, r.id_b) for r in out.collect()]
         assert got == [(1, 2)]
+
+    def test_null_vector_names_the_cause(self, spark):
+        from neo4j_spark.ml.similarity import embedding_cosine_pairs
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0]), (2, None), (3, [0.0, 1.0, 0.0])],
+            "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match="null vector"):
+            embedding_cosine_pairs(df, threshold=0.5).collect()
+
+    def test_ragged_vectors_name_both_dimensions(self, spark):
+        from neo4j_spark.ml.similarity import embedding_cosine_pairs
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0]),
+             (3, [0.0, 1.0, 0.0])],
+            "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match="dimensions 3 and 4 differ"):
+            embedding_cosine_pairs(df, threshold=0.5).collect()

@@ -1,5 +1,5 @@
 """Equivalence probe for the EXISTS{}/COUNT{} pattern-subquery
-pre-aggregation (_preagg_pattern_sub): 29 shapes (20 firing, 9 bail),
+pre-aggregation (_preagg_pattern_sub): 29 shapes (15 firing, 14 bail),
 each compared against the generic lowering with the rewrite
 monkeypatched off.  Usage: python tools/probe_subpreagg.py [sf_dir]"""
 import sys
@@ -48,21 +48,21 @@ QUERIES = [
   "RETURN count(*) AS n"),
  ("exists_fire_return_pos",
   "MATCH (n:Nation) RETURN n.name AS k, EXISTS { (n)-[:FROM_NATION]-() } AS e"),
- # --- should fire: inner WHERE on the rel's own props (r9) ---
- ("count_fire_where_rel_prop",
+ # --- must bail: any inner WHERE, even one on the rel's own props ---
+ ("bail_where_rel_prop",
   "MATCH (o:Order) RETURN o.orderkey AS k, "
   "COUNT { (o)-[l:CONTAINS]->() WHERE l.quantity > 25 } AS n"),
- ("count_fire_where_in_relpat",
+ ("bail_where_in_relpat",
   "MATCH (o:Order) RETURN o.orderkey AS k, "
   "COUNT { (o)-[l:CONTAINS WHERE l.quantity > 25]->() } AS n"),
- ("exists_fire_where_rel_prop",
+ ("bail_exists_where_rel_prop",
   "MATCH (o:Order) WHERE EXISTS { (o)-[l:CONTAINS]->(:Part) "
   "WHERE l.tax > 0.05 } RETURN count(*) AS n"),
- ("count_fire_where_rel_fn",
+ ("bail_where_rel_fn",
   "MATCH (o:Order) RETURN o.orderkey AS k, "
   "COUNT { (o)-[l:CONTAINS]->() WHERE l.shipdate IS NOT NULL "
   "AND type(l) = 'CONTAINS' } AS n"),
- ("count_fire_where_missing_prop",
+ ("bail_where_missing_prop",
   "MATCH (o:Order) RETURN o.orderkey AS k, "
   "COUNT { (o)-[l:CONTAINS]->() WHERE l.nosuch > 1 } AS n"),
  # --- must bail (inner WHERE / props / two-hop / both-bound / var-length / wrong label) ---
@@ -126,3 +126,4 @@ for name, q in QUERIES:
     print(f"{status} {name}: rows_equal={ok_eq} fired={calls['hit']} "
           f"want_fire={want_fire} ({len(on)} rows)", flush=True)
 print("FAILURES:", fail)
+sys.exit(1 if fail else 0)
